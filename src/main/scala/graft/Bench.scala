@@ -1065,6 +1065,24 @@ object Bench {
     (verdicts.count(v => v.startsWith("real") && v != "real-suspect-channel" && v != "real-unconfirmed"),
      verdicts.count(v => v == "real-suspect-channel" || v == "real-unconfirmed"))
 
+  /** Bytes of stdout the slim result line may take: a consumer that keeps
+    * only a ~2 KB tail of stdout must still get the whole line. */
+  private[graft] val slimBudget = 1900
+
+  /** The stdout result line: `head` and `tail` wrap a `queries` map of
+    * per-query seconds, filled in `order` while the whole line stays
+    * within [[slimBudget]]. */
+  private[graft] def slimLine(head: String, order: Seq[(String, Double)], tail: String): String = {
+    val shown = s""""queries_shown":${order.size}"""
+    var used = head.length + tail.length + """"queries":{},""".length + shown.length
+    val picked = order.iterator.map { case (n, v) => "\"" + esc(n) + "\":" + fmt3(v) }.filter { e =>
+      val fits = used + e.length + 1 <= slimBudget
+      if (fits) used += e.length + 1
+      fits
+    }.toSeq
+    s"""$head"queries":${picked.mkString("{", ",", "}")},"queries_shown":${picked.size}$tail"""
+  }
+
   private def writeArtifacts(
       outPath: String,
       sfDir: String,
@@ -1300,13 +1318,18 @@ object Bench {
       if (vsPrior.nonEmpty)
         s""","probe_regressed":${vsPrior.size},"probe_real":${if (probeFailed && nOverMargin == 0) "null" else nReal.toString},"probe_real_suspect":$nRealSuspect,"probe_reprobed":${probed2.size},"probe_failed":$probeFailed"""
       else ""
-    val slim =
-      s"""{"metric":"total","value":${fmt3(total)},${exclPanel}"unit":"sec","reps":$reps,"warmups":$warmups,"cpus":$cpus,"n_ok":${timed.size},"n_failed":${failed.size},"contaminated":$contaminatedFinal,"mem_pressure":$memPressure,"shards":$shards,"load_end":${fmt3(loadEnd)},"foreign_heavy_end":${foreignEnd.getOrElse(-1)},"drift":$driftJson$probeCounts,"queries":{},"queries_shown":0,"full_artifact":"$outPath","compact_artifact":"BENCH_compact.json","sf":"$sfDir"}"""
+    val slimHead =
+      s"""{"metric":"total","value":${fmt3(total)},${exclPanel}"unit":"sec","reps":$reps,"warmups":$warmups,"cpus":$cpus,"n_ok":${timed.size},"n_failed":${failed.size},"contaminated":$contaminatedFinal,"mem_pressure":$memPressure,"shards":$shards,"load_end":${fmt3(loadEnd)},"foreign_heavy_end":${foreignEnd.getOrElse(-1)},"drift":$driftJson$probeCounts,"""
+    val slimTail = s""","full_artifact":"$outPath","compact_artifact":"BENCH_compact.json","sf":"$sfDir"}"""
+    val slimOrder = ordered.map(n => n -> timed(n))
     // hard tail-capture budget: a pathological outPath/sfDir must degrade
     // to a still-parseable minimal line, never to a clipped JSON
     println(
-      if (slim.length <= 1900) slim
-      else s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","n_ok":${timed.size},"n_failed":${failed.size},"contaminated":$contaminatedFinal,"queries":{},"queries_shown":0,"full_artifact":"BENCH_out.json","sf":"sf"}""")
+      if (slimHead.length + slimTail.length <= 1700) slimLine(slimHead, slimOrder, slimTail)
+      else slimLine(
+        s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","n_ok":${timed.size},"n_failed":${failed.size},"contaminated":$contaminatedFinal,""",
+        slimOrder,
+        ""","full_artifact":"BENCH_out.json","sf":"sf"}"""))
     if (writeCompact) {
       val compactPath = sys.env.getOrElse("SPARK_GRAFT_COMPACT_OUT", "BENCH_compact.json")
       try Files.writeString(Paths.get(compactPath), compact + "\n")

@@ -514,7 +514,6 @@ object ScaleProbe {
     // fold work is identical.
     if (want("streamser")) {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
       import graft.ta.{IndicatorSpec, Strategy}
       import graft.streaming.StreamingTa
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -527,27 +526,12 @@ object ScaleProbe {
         "t3", "adosc", "kdj", "smi", "stc", "mfi", "cmf", "aroon", "qstick", "drawdown"
       )
       val st45 = Strategy("s45", bigKinds.map(k => IndicatorSpec(k)))
-      val sks = st45.ta.map(s =>
-        StreamingTa.windowStream(s).orElse(StreamingTa.recStream(s)).get)
-      val barSchema = StructType(Seq(
-        StructField("series_id", StringType), StructField("ts", LongType),
-        StructField("open", DoubleType), StructField("high", DoubleType),
-        StructField("low", DoubleType), StructField("close", DoubleType),
-        StructField("volume", DoubleType)))
-      val extSchemas = sks.map(sp => StructType(barSchema.fields ++ sp.stage().fields))
-      val entries = sks.zip(extSchemas).map { case (sp, es) =>
-        val k = sp.make(); k.init(es); k.reset(); (k, sp.stage())
-      }.toArray
+      val entries = st45.ta.map(s => StreamingTa.streamKernel(s).get.stage()).toArray
       (0 until 200).foreach { i =>
         val v = 100.0 + 10.0 * math.sin(i / 7.0)
-        val t = StreamingTa.BarTick("s", i.toLong, v, v + 1, v - 1, v + 0.2, 100.0 + i % 7)
-        val base = Array[Any](t.series_id, t.ts, t.open, t.high, t.low, t.close, t.volume)
-        entries.zip(extSchemas).foreach { case ((k, stg), es) =>
-          k.update(new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-            base ++ stg.update(t), es))
-        }
+        entries.foreach(_.update(StreamingTa.BarTick("s", i.toLong, v, v + 1, v - 1, v + 0.2, 100.0 + i % 7)))
       }
-      val stateObj = StreamingTa.BatchKernelState(199L, 0L, entries)
+      val stateObj = StreamingTa.BatchKernelState(199L, 0L, 0L, entries)
       def ser(o: AnyRef): Array[Byte] = {
         val bo = new java.io.ByteArrayOutputStream()
         val oo = new java.io.ObjectOutputStream(bo)
@@ -658,8 +642,7 @@ object ScaleProbe {
         (lit(100.2) + sin(col("id") / 7.0) * 10.0).as("close"),
         (lit(100.0) + col("id") % 7).as("volume")
       ).as[StreamingTa.BarTick]
-      val sks = st5.ta.map(s =>
-        StreamingTa.windowStream(s).orElse(StreamingTa.recStream(s)).get)
+      val sks = st5.ta.map(s => StreamingTa.streamKernel(s).get)
       val bootSec = timed {
         StreamingTa.bootstrapState(hist, sks).collect().length.toLong
       }
@@ -693,8 +676,7 @@ object ScaleProbe {
         IndicatorSpec("ema", Map("length" -> 10)), IndicatorSpec("rsi", Map("length" -> 10)),
         IndicatorSpec("atr", Map("length" -> 10)), IndicatorSpec("sma", Map("length" -> 10)),
         IndicatorSpec("psar")))
-      val sks = st5.ta.map(s =>
-        StreamingTa.windowStream(s).orElse(StreamingTa.recStream(s)).get)
+      val sks = st5.ta.map(s => StreamingTa.streamKernel(s).get)
       val m = 8000000
       for (nSeries <- Seq(1, 4, 32, 256)) {
         val hist = spark.range(m).select(
@@ -816,41 +798,6 @@ object ScaleProbe {
         )
         graft.CacheRegistry.releaseTransients(spark)
       }
-      graft.CacheRegistry.release(spark)
-    }
-
-    // ---- REC fold vs mapPartitions kernel (round 9): the same state
-    // machine as a window-buffer fold (accessor path) vs the retained
-    // rec.perSeries kernel spelling — measures what the fold lowering
-    // buys at scale (no Row boxing, no second Exchange when composed,
-    // same O(n) sequential dependency).
-    if (want("recfold")) for (l <- Seq(50000, 200000)) {
-      import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField}
-      def dblF(s0: String) = StructField(s0, DoubleType, nullable = true)
-      val bars = graft.CacheRegistry.track(
-        series(spark, 256, l).select(
-          col("series_id"), col("ts"),
-          col("close"), (col("close") + 1.5).as("high"), (col("close") - 1.5).as("low"),
-          col("close").as("open"), lit(1000.0).as("volume")
-        )
-      )
-      bars.count()
-      emit("psar_kernel", 256L * l, timed(force(
-        graft.ta.rec.perSeries(bars,
-          Seq(dblF("psar_long"), dblF("psar_short"), dblF("psar_af"),
-            StructField("psar_reversal", IntegerType, nullable = true)))(
-          () => new graft.ta.rec.Psar()), "psar_af")))
-      emit("psar_fold", 256L * l, timed(force(bars.ta.psar(), "psar_af")))
-      emit("supertrend_kernel", 256L * l, timed(force(
-        graft.ta.rec.perSeries(bars,
-          Seq(dblF("supert_7"), StructField("supertd_7", IntegerType, nullable = true),
-            dblF("supertl_7"), dblF("superts_7")))(
-          () => new graft.ta.rec.Supertrend(7, 3.0)), "supert_7")))
-      emit("supertrend_fold", 256L * l, timed(force(bars.ta.supertrend(7, 3.0), "supert_7")))
-      emit("rsx_kernel", 256L * l, timed(force(
-        graft.ta.rec.perSeries(bars, Seq(dblF("rsx_14")))(
-          () => new graft.ta.rec.Rsx(14)), "rsx_14")))
-      emit("rsx_fold", 256L * l, timed(force(bars.ta.rsx(14), "rsx_14")))
       graft.CacheRegistry.release(spark)
     }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 
 /** Round-9 extension of the SeededComposites fold layer to the
   * BRANCHING per-row state machines (SURVEY.md §2.A REC class): psar and
-  * supertrend, previously only reachable through rec.Psar/rec.Supertrend
+  * supertrend, previously only reachable through RecKernels.Psar/RecKernels.Supertrend
   * mapPartitions kernels (graft.ta.rec). Both have O(1) state whose
   * update is a pure If-tree over the previous state — exactly the shape
   * a DeclarativeAggregate window buffer expresses — so each collapses
@@ -35,7 +35,7 @@ object RecFolds {
 
   /** Parabolic SAR (reference: pandas_ta/trend/psar.py, declared spec
     * SURVEY §2.B) as ONE window fold emitting STRUCT(long, short, af,
-    * rev). State machine = rec.Psar verbatim: row 1 records the seed
+    * rev). State machine = RecKernels.Psar verbatim: row 1 records the seed
     * bars and emits nulls; row 2 picks the trend from close₁ ≥ close₀
     * and seeds sar/ep; row ≥ 3 steps sar += af·(ep − sar) clamped to
     * the prior two lows (rising) / highs (falling) and bumps af on a
@@ -126,7 +126,7 @@ object RecFolds {
 
   /** Supertrend (reference: pandas_ta/overlap/supertrend.py, declared
     * spec) as ONE window fold emitting STRUCT(st, dir, long, short).
-    * State machine = rec.Supertrend verbatim: in-fold Wilder ATR over
+    * State machine = RecKernels.Supertrend verbatim: in-fold Wilder ATR over
     * the true range (seed tr₁, recurrence (1−1/n)·atr + tr/n), bands
     * ub/lb = hl2 ± mult·atr with the monotone carry gated on the prior
     * close, direction flip when close crosses the carried band. Null
@@ -211,7 +211,7 @@ object RecFolds {
   // kernels remain the streaming path and the spec references.
   // ==================================================================
 
-  /** Heikin-Ashi bars (rec.HeikinAshi) — STRUCT(ha_open, ha_high,
+  /** Heikin-Ashi bars (RecKernels.HeikinAshi) — STRUCT(ha_open, ha_high,
     * ha_low, ha_close). The current bar's high/low ride buffer slots so
     * evaluate sees them (evaluate reads only the buffer). */
   case class HaFold(o: Expression, h: Expression, l: Expression, c: Expression)
@@ -253,7 +253,7 @@ object RecFolds {
       copy(o = c0(0), h = c0(1), l = c0(2), c = c0(3))
   }
 
-  /** McGinley Dynamic (rec.Mcgd): y₀ = x₀; y += (x−y)/(n·(x/y)⁴),
+  /** McGinley Dynamic (RecKernels.Mcgd): y₀ = x₀; y += (x−y)/(n·(x/y)⁴),
     * y = 0 and null inputs hold state (null output until seeded). */
   case class McgdFold(x: Expression, n: Int) extends AggregateWindowFunction {
     override def children: Seq[Expression] = Seq(x)
@@ -288,7 +288,7 @@ object RecFolds {
       copy(x = c0(0))
   }
 
-  /** Ehlers 2-pole super smoother (rec.Ssf): y = c1·x + c2·y' + c3·y'',
+  /** Ehlers 2-pole super smoother (RecKernels.Ssf): y = c1·x + c2·y' + c3·y'',
     * seeds y₀=x₀, y₁=x₁; null inputs emit the running value. */
   case class SsfFold(x: Expression, n: Int) extends AggregateWindowFunction {
     private val a = math.exp(-math.sqrt(2.0) * math.Pi / n)
@@ -322,7 +322,7 @@ object RecFolds {
       copy(x = c0(0))
   }
 
-  /** Holt-Winter MA (rec.Hwma): F/V/A recursion, F₀ = x₀. */
+  /** Holt-Winter MA (RecKernels.Hwma): F/V/A recursion, F₀ = x₀. */
   case class HwmaFold(x: Expression, na: Double, nb: Double, nc: Double)
       extends AggregateWindowFunction {
     override def children: Seq[Expression] = Seq(x)
@@ -361,7 +361,7 @@ object RecFolds {
       copy(x = c0(0))
   }
 
-  /** 1-D local-level Kalman filter (rec.Kalman) — STRUCT(kf, kf_gain).
+  /** 1-D local-level Kalman filter (RecKernels.Kalman) — STRUCT(kf, kf_gain).
     * Seed x₀ = z₀, P₀ = 1 (gain null on the seed row); null z emits the
     * running level with null gain, state unchanged. */
   case class KalmanFold(z: Expression, q: Double, rNoise: Double)
@@ -403,7 +403,7 @@ object RecFolds {
       copy(z = c0(0))
   }
 
-  /** Ehlers Even Better SineWave (rec.Ebsw): 1-pole HP → 2-pole super
+  /** Ehlers Even Better SineWave (RecKernels.Ebsw): 1-pole HP → 2-pole super
     * smoother → 3-bar wave/power normalization; the per-row output uses
     * the PRE-shift filter history, so it rides its own buffer slot. */
   case class EbswFold(c: Expression, n: Int, bars: Int) extends AggregateWindowFunction {
@@ -458,7 +458,7 @@ object RecFolds {
       copy(c = c0(0))
   }
 
-  /** Holt-Winter channel (rec.Hwc) — STRUCT(hwc_mid, hwc_upper,
+  /** Holt-Winter channel (RecKernels.Hwc) — STRUCT(hwc_mid, hwc_upper,
     * hwc_lower): the hwma F/V/A recursion plus the variance recursion
     * var = (1−nd)·var' + nd·(x − hwma')²; after the update prevHwma IS
     * the current mid, so evaluate reads straight from the buffer. */
@@ -521,7 +521,7 @@ object RecFolds {
       copy(x = c0(0))
   }
 
-  /** TD Sequential setup counters (rec.TdSeq) — STRUCT(td_seq_up,
+  /** TD Sequential setup counters (RecKernels.TdSeq) — STRUCT(td_seq_up,
     * td_seq_dn). Self-contained: the close[4] lag rides four shift
     * slots instead of a staged column, so the fold needs only `close`. */
   case class TdSeqFold(c: Expression) extends AggregateWindowFunction {
@@ -569,7 +569,7 @@ object RecFolds {
       copy(c = c0(0))
   }
 
-  /** Jurik RSX (rec.Rsx): not a ring buffer after all — the three-stage
+  /** Jurik RSX (RecKernels.Rsx): not a ring buffer after all — the three-stage
     * cascade is twelve NAMED filter slots plus the prev-momentum slot,
     * all O(1), so it folds like everything else. v14/v20 derive from the
     * post-update slots at evaluate. */
@@ -645,7 +645,7 @@ object RecFolds {
   // (broadcast stats join) use rec.perSeries.
   // ==================================================================
 
-  /** Gann HiLo activator (rec.Hilo) — STRUCT(hilo, hilo_long,
+  /** Gann HiLo activator (RecKernels.Hilo) — STRUCT(hilo, hilo_long,
     * hilo_short). Children: close + the staged sma(high,hn)/sma(low,ln)
     * columns. Trend flips on the PREVIOUS row's bands; output uses the
     * CURRENT bands, which after the update are exactly the pmh/pml
@@ -689,7 +689,7 @@ object RecFolds {
       copy(c = c0(0), mh = c0(1), ml = c0(2))
   }
 
-  /** Fisher transform recursion (rec.Fisher) — STRUCT(fisher, signal).
+  /** Fisher transform recursion (RecKernels.Fisher) — STRUCT(fisher, signal).
     * Child: the staged range-position column (null during warm-up holds
     * state and emits nulls). Outputs ride buffer slots because the
     * signal is the PRE-update fisher value. */
@@ -733,7 +733,7 @@ object RecFolds {
       copy(pos = c0(0))
   }
 
-  /** QQE trailing bands (rec.Qqe) — STRUCT(qqe, trend, long, short).
+  /** QQE trailing bands (RecKernels.Qqe) — STRUCT(qqe, trend, long, short).
     * Children: the staged smoothed-RSI (__rsima) and DAR (__dar)
     * columns. Band carry and trend flip read the PREVIOUS state; the
     * outputs are exactly the post-update slots. */

@@ -286,7 +286,7 @@ object Rec2Queries {
   }
 
   // ------------------------------------------------------------- kalman
-  /** 1-D Kalman local-level filter per user series (rec.Kalman): the
+  /** 1-D Kalman local-level filter per user series (RecKernels.Kalman): the
     * predict/gain/update recursion replayed step-for-step as a recursive
     * CTE — gain is state-only arithmetic, so both engines fold identical
     * doubles. Null-close rows mirror the kernel exactly (emit current

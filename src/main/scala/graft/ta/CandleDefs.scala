@@ -5,26 +5,21 @@ import org.apache.spark.sql.functions._
 
 /** ALL six candle-pattern waves (the reference candles/cdl_pattern.py
   * TA-Lib delegation re-expressed as self-contained declared specs),
-  * parameterized over their INPUTS so one definition serves three
-  * consumers that previously could drift:
-  *  - the batch Ta accessors (`cdlPatterns`..`cdlPatterns6`) and the
-  *    StrategyCompiler single-level lowerings — instance [[candleDefs]]
-  *    (inputs = the window primitives shift/rmean);
-  *  - the STREAMING stage (StreamingTa.CandleWaveStage) — an instance over
-  *    a flat lag-column schema (`open_1`..`close_4`, `avg_rng`,
-  *    `avg_body`), whose analyzed expressions are evaluated per tick from
-  *    a ring, so streamed flags are the SAME Catalyst trees batch runs.
+  * over the window primitives shift/rmean. One definition serves the
+  * batch Ta accessors (`cdlPatterns`..`cdlPatterns6`) and the
+  * StrategyCompiler single-level lowerings; streaming evaluates those
+  * same lowered plans tick by tick (StreamingTa's plan-driven stage), so
+  * streamed flags are the SAME Catalyst trees batch runs.
   *
   * Conventions: real-body gap = disjoint [min,max](o,c) intervals, doji =
   * body ≤ 0.1·range, Equal tolerance = 0.05·sma(h−l,10). Flags emit
   * 1.0/0.0, null while the needed lags (or the 10-bar averages) are
   * undefined. */
-private[graft] class CandleWaves(
-    cur: String => Column,
-    sh: (String, Int) => Column,
-    avgRngIn: () => Column,
-    avgBodyIn: () => Column
-) {
+private[ta] object candleDefs {
+  private def cur(name: String): Column = col(name)
+  private def sh(name: String, k: Int): Column = prim.shift(col(name), k)
+  private def avgRngIn(): Column = prim.rmean(col("high") - col("low"), 10)
+  private def avgBodyIn(): Column = prim.rmean(abs(col("close") - col("open")), 10)
 
   private val close = cur("close")
   private val open = cur("open")
@@ -358,24 +353,4 @@ private[graft] class CandleWaves(
   private def kickDn: Column =
     pBull && pRng > 0 && pBody >= lit(0.95) * pRng &&
       bear && rng > 0 && body >= lit(0.95) * rng && open < pl
-
-  /** wave lookup by registry kind suffix (1-based; "" = wave 1). */
-  def wave(i: Int): Seq[(String, Column)] = i match {
-    case 1 => wave1
-    case 2 => wave2
-    case 3 => wave3
-    case 4 => wave4
-    case 5 => wave5
-    case 6 => wave6
-    case _ => throw new IllegalArgumentException(s"no candle wave $i")
-  }
 }
-
-/** Batch instance: inputs are the canonical window primitives. */
-private[ta] object candleDefs
-    extends CandleWaves(
-      name => col(name),
-      (name, k) => prim.shift(col(name), k),
-      () => prim.rmean(col("high") - col("low"), 10),
-      () => prim.rmean(abs(col("close") - col("open")), 10)
-    )

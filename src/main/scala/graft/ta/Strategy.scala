@@ -263,19 +263,19 @@ object registry {
   def hasLowering(spec: IndicatorSpec): Boolean =
     StrategyCompiler.compile(spec).isDefined || StrategyCompiler.compileRec(spec).isDefined
 
-  /** REC lowering surface for streaming and tests: (batch staging
-    * transform — the same leveled columns runAll stages, temps kept
-    * because the kernel reads them —, output schema, kernel factory). */
+  /** REC kernel lowering (jma, fixed-reference cusum) for streaming and
+    * tests: output schema, the constant columns the kernel reads besides
+    * the bars, and the kernel factory. */
   def recKernel(spec: IndicatorSpec): Option[
-    (DataFrame => DataFrame, Seq[org.apache.spark.sql.types.StructField], () => rec.Kernel)
+    (Seq[org.apache.spark.sql.types.StructField], Seq[(String, Double)], () => rec.Kernel)
   ] =
-    StrategyCompiler.compileRec(spec).map { rp =>
-      val stage = (df: DataFrame) =>
-        rp.staging.foldLeft(df.withColumn("__rn", prim.rn)) { (d, lvl) =>
-          d.withColumns(lvl.toMap)
-        }
-      (stage, rp.outs, rp.make)
-    }
+    StrategyCompiler.compileRec(spec).map(rp => (rp.outs, rp.consts, rp.make))
+
+  /** The batch plan of ONE spec's compiled lowering over `df` — the same
+    * merged-level plan `strategy` runs for it, without the builder-fold
+    * fallback. None when the kind has no column lowering. */
+  def lowered(df: DataFrame, spec: IndicatorSpec): Option[DataFrame] =
+    StrategyCompiler.compile(spec).map(cp => StrategyCompiler.runAll(df, Seq(cp), Nil))
 
   /** Compile and run a whole Strategy — one lazy plan, no process pool.
     *

@@ -245,8 +245,7 @@ private[ta] object StrategyCompiler {
         ))
       case "psar" =>
         // round-9: struct window fold (RecFolds.PsarFold) — shares the
-        // W-class Exchange instead of the mapPartitions re-repartition;
-        // compileRec's kernel lowering remains for the streaming path.
+        // W-class Exchange instead of the mapPartitions re-repartition
         val af0 = dd(p, "af0", 0.02); val afP = dd(p, "af", 0.02); val maxAf = dd(p, "max_af", 0.2)
         val t = "__psar"
         Some(ColPlan(
@@ -1335,136 +1334,39 @@ private[ta] object StrategyCompiler {
     }
   }
 
-  /** A REC kernel spec lowered for the batched pass: staging column
-    * levels (names are the ones the kernel's init() resolves), kernel
-    * outputs, factory, and staging temps to drop afterwards. */
+  /** A REC kernel spec lowered for the batched pass: the kernel's outputs
+    * and factory, plus the constant columns it reads besides the bars
+    * (names are the ones the kernel's init() resolves). */
   final case class RecPlan(
-      staging: Seq[Level],
       outs: Seq[org.apache.spark.sql.types.StructField],
       make: () => rec.Kernel,
-      temps: Seq[String]
-  )
+      consts: Seq[(String, Double)] = Nil
+  ) {
+    def staging: Seq[Level] =
+      if (consts.isEmpty) Nil else Seq(consts.map { case (n, v) => n -> lit(v) })
+  }
 
   private def dbl(name: String) =
     org.apache.spark.sql.types.StructField(name, org.apache.spark.sql.types.DoubleType, nullable = true)
-  private def intF(name: String) =
-    org.apache.spark.sql.types.StructField(name, org.apache.spark.sql.types.IntegerType, nullable = true)
-  private def longF(name: String) =
-    org.apache.spark.sql.types.StructField(name, org.apache.spark.sql.types.LongType, nullable = true)
 
-  /** Lowerings for the REC mapPartitions kernels (mirror the Ta wrappers;
-    * staging names are FIXED — the kernels resolve them by fieldIndex). */
+  /** The kinds batch runs as REC kernels, because no window fold expresses
+    * them: jma (11/65-entry ring buffers) and fixed-reference cusum (the
+    * trained μ/σ ride as constant columns; retrospective cusum needs a
+    * whole-series aggregate and stays on the builder fold). */
   def compileRec(spec: IndicatorSpec): Option[RecPlan] = {
     if (Seq("offset", "fillna", "prefix", "suffix").exists(spec.params.contains)) return None
     val p = spec.params
     spec.kind match {
-      case "psar" =>
-        val af0 = dd(p, "af0", 0.02); val af = dd(p, "af", 0.02); val maxAf = dd(p, "max_af", 0.2)
-        Some(RecPlan(
-          Nil,
-          Seq(dbl("psar_long"), dbl("psar_short"), dbl("psar_af"), intF("psar_reversal")),
-          () => new rec.Psar(af0, af, maxAf),
-          Nil
-        ))
-      case "supertrend" =>
-        val n = i(p, "length", 7); val mult = dd(p, "multiplier", 3.0)
-        Some(RecPlan(
-          Nil,
-          Seq(dbl(s"supert_$n"), intF(s"supertd_$n"), dbl(s"supertl_$n"), dbl(s"superts_$n")),
-          () => new rec.Supertrend(n, mult),
-          Nil
-        ))
-      case "ha" =>
-        Some(RecPlan(
-          Nil,
-          Seq(dbl("ha_open"), dbl("ha_high"), dbl("ha_low"), dbl("ha_close")),
-          () => new rec.HeikinAshi,
-          Nil
-        ))
-      case "mcgd" =>
-        val n = i(p, "length", 10)
-        Some(RecPlan(Nil, Seq(dbl(s"mcgd_$n")), () => new rec.Mcgd(n, "close"), Nil))
-      case "kalman" =>
-        val q = dd(p, "q", 0.01); val r = dd(p, "r", 1.0)
-        Some(RecPlan(Nil, Seq(dbl("kf"), dbl("kf_gain")), () => new rec.Kalman(q, r, "close"), Nil))
-      // Fixed-reference CUSUM only: the trained μ/σ are literals, so the
-      // staging is causal and streamable. Full-series retrospective mode
-      // (no mu/sd) needs a whole-series aggregate — accessor-only, routed
-      // to the builder fold (and rejected by the streaming registry).
       case "cusum" if p.contains("mu") && p.contains("sd") =>
-        val kk = dd(p, "k", 0.5); val hh = dd(p, "h", 5.0)
-        val mu = dd(p, "mu", 0.0); val sd = dd(p, "sd", 1.0)
         Some(RecPlan(
-          Seq(Seq("__mu" -> lit(mu), "__sd" -> lit(sd))),
-          Seq(dbl("cusum_pos"), dbl("cusum_neg"), longF("cusum_alarm")),
-          () => new rec.Cusum(kk, hh, "close"),
-          Seq("__mu", "__sd")
-        ))
-      case "ssf" =>
-        val n = i(p, "length", 10)
-        Some(RecPlan(Nil, Seq(dbl(s"ssf_$n")), () => new rec.Ssf(n, "close"), Nil))
-      case "hwma" =>
-        val na = dd(p, "na", 0.2); val nb = dd(p, "nb", 0.1); val nc = dd(p, "nc", 0.1)
-        Some(RecPlan(Nil, Seq(dbl("hwma")), () => new rec.Hwma(na, nb, nc, "close"), Nil))
-      case "rsx" =>
-        val n = i(p, "length", 14)
-        Some(RecPlan(Nil, Seq(dbl(s"rsx_$n")), () => new rec.Rsx(n), Nil))
-      case "ebsw" =>
-        val n = i(p, "length", 40); val bars = i(p, "bars", 10)
-        Some(RecPlan(Nil, Seq(dbl(s"ebsw_$n")), () => new rec.Ebsw(n, bars), Nil))
-      case "hwc" =>
-        val na = dd(p, "na", 0.2); val nb = dd(p, "nb", 0.1); val nc = dd(p, "nc", 0.1)
-        val nd = dd(p, "nd", 0.1); val k = dd(p, "k", 1.0)
-        Some(RecPlan(
-          Nil,
-          Seq(dbl("hwc_mid"), dbl("hwc_upper"), dbl("hwc_lower")),
-          () => new rec.Hwc(na, nb, nc, nd, k),
-          Nil
+          Seq(dbl("cusum_pos"), dbl("cusum_neg"),
+            org.apache.spark.sql.types.StructField("cusum_alarm", org.apache.spark.sql.types.LongType, nullable = true)),
+          { val k = dd(p, "k", 0.5); val h = dd(p, "h", 5.0); () => new rec.Cusum(k, h, "close") },
+          Seq("__mu" -> dd(p, "mu", 0.0), "__sd" -> dd(p, "sd", 1.0))
         ))
       case "jma" =>
         val n = i(p, "length", 7); val phase = dd(p, "phase", 0.0)
-        Some(RecPlan(Nil, Seq(dbl(s"jma_$n")), () => new rec.Jma(n, phase), Nil))
-      case "fisher" =>
-        val n = i(p, "length", 9)
-        val m = (high + low) / 2.0
-        val hh = rmax(m, n); val ll = rmin(m, n)
-        Some(RecPlan(
-          Seq(Seq("__pos" -> (lit(2.0) * (sdiv(m - ll, hh - ll) - 0.5)))),
-          Seq(dbl(s"fisher_$n"), dbl(s"fisher_signal_$n")),
-          () => new rec.Fisher,
-          Seq("__pos")
-        ))
-      case "td_seq" =>
-        Some(RecPlan(
-          Seq(Seq("__c4" -> shift(close, 4))),
-          Seq(longF("td_seq_up"), longF("td_seq_dn")),
-          () => new rec.TdSeq,
-          Seq("__c4")
-        ))
-      case "hilo" =>
-        val hn = i(p, "high_length", 13); val ln = i(p, "low_length", 21)
-        Some(RecPlan(
-          Seq(Seq("__mh" -> rmean(high, hn), "__ml" -> rmean(low, ln))),
-          Seq(dbl("hilo"), dbl("hilo_long"), dbl("hilo_short")),
-          () => new rec.Hilo,
-          Seq("__mh", "__ml")
-        ))
-      case "qqe" =>
-        val n = i(p, "length", 14); val smooth = i(p, "smooth", 5); val factor = dd(p, "factor", 4.236)
-        val wilders = n * 2 - 1
-        val (lEma, tEma) = emaLv(col("__qrsi"), "__rsima", smooth)
-        Some(RecPlan(
-          Seq(
-            Seq("__qrsi" -> call_function("graft_rsi_k", close.cast("double"), lit(n)).over(prim.cum))
-          ) ++ lEma ++ Seq(
-            Seq("__adr" -> abs(diff(col("__rsima")))),
-            Seq("__matr" -> ewm(col("__adr"), 1.0 / wilders)),
-            Seq("__dar" -> (ewm(col("__matr"), 1.0 / wilders) * factor))
-          ),
-          Seq(dbl(s"qqe_$n"), intF(s"qqe_trend_$n"), dbl(s"qqe_long_$n"), dbl(s"qqe_short_$n")),
-          () => new rec.Qqe,
-          Seq("__qrsi", "__rsima", "__adr", "__matr", "__dar") ++ tEma
-        ))
+        Some(RecPlan(Seq(dbl(s"jma_$n")), () => new rec.Jma(n, phase)))
       case _ => None
     }
   }
@@ -1488,7 +1390,7 @@ private[ta] object StrategyCompiler {
       reserved.isEmpty,
       s"column prefix '__' is reserved by the strategy compiler; rename: ${reserved.mkString(", ")}"
     )
-    val allPlans = plans ++ recPlans.map(rp => ColPlan(rp.staging, rp.temps))
+    val allPlans = plans ++ recPlans.map(rp => ColPlan(rp.staging, rp.consts.map(_._1)))
     val nLevels = if (allPlans.isEmpty) 0 else allPlans.map(_.levels.size).max
     // Stack every level as an unresolved Project over the analyzed base and
     // analyze the whole tree ONCE (GraftBridge.ofRows). The old one-
@@ -1531,14 +1433,14 @@ private[ta] object StrategyCompiler {
     // another plan's declared OUTPUT (the atr builder keeps true_range):
     // outputs win, only globally-unclaimed temps are dropped
     val outputs = allPlans.flatMap(pl => pl.levels.flatten.map(_._1).filterNot(pl.temps.contains)).toSet
-    val kernelNeeds = recPlans.flatMap(_.temps).toSet
+    val kernelNeeds = recPlans.flatMap(_.consts.map(_._1)).toSet
     val earlyTemps = ("__rn" +: plans.flatMap(_.temps)).distinct
       .filterNot(outputs.contains)
       .filterNot(kernelNeeds.contains)
     if (allPlans.nonEmpty) d = d.drop(earlyTemps: _*)
     if (recPlans.nonEmpty) {
       d = rec.perSeriesBatch(d, recPlans.map(rp => (rp.outs, rp.make)))
-      val lateTemps = recPlans.flatMap(_.temps).distinct.filterNot(outputs.contains)
+      val lateTemps = recPlans.flatMap(_.consts.map(_._1)).distinct.filterNot(outputs.contains)
       d = d.drop(lateTemps: _*)
     }
     d

@@ -674,7 +674,7 @@ final class Ta(private val df: DataFrame) {
   import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField}
   private def dbl(name: String) = StructField(name, DoubleType, nullable = true)
 
-  /** Parabolic SAR — rec.Psar for the declared state machine. Round-9:
+  /** Parabolic SAR — RecKernels.Psar for the declared state machine. Round-9:
     * ONE struct-valued window fold (functions.RecFolds.PsarFold) — the
     * branching trend/EP/AF recursion lives in the aggregation buffer, so
     * psar shares the W-class Exchange instead of re-repartitioning
@@ -698,7 +698,7 @@ final class Ta(private val df: DataFrame) {
       .drop("__ps")
   }
 
-  /** Supertrend — rec.Supertrend for the state machine; round-9 fold
+  /** Supertrend — RecKernels.Supertrend for the state machine; round-9 fold
     * (functions.RecFolds.SupertrendFold), same rationale as psar. */
   def supertrend(n: Int = 7, mult: Double = 3.0): DataFrame = {
     val s = call_function(
@@ -718,9 +718,9 @@ final class Ta(private val df: DataFrame) {
       .drop("__st")
   }
 
-  /** Heikin-Ashi bars — see rec.HeikinAshi. */
+  /** Heikin-Ashi bars — see RecKernels.HeikinAshi. */
   def ha: DataFrame = {
-    // round-9 struct fold (RecFolds.HaFold); rec.HeikinAshi stays as the
+    // round-9 struct fold (RecFolds.HaFold); RecKernels.HeikinAshi stays as the
     // spec reference and the streaming kernel — same for every fold
     // reroute below
     val s = call_function(
@@ -739,14 +739,14 @@ final class Ta(private val df: DataFrame) {
       .drop("__ha")
   }
 
-  /** McGinley Dynamic — rec.Mcgd; round-9 fold (RecFolds.McgdFold). */
+  /** McGinley Dynamic — RecKernels.Mcgd; round-9 fold (RecFolds.McgdFold). */
   def mcgd(n: Int = 10, src: String = "close"): DataFrame =
     df.withColumn(
       s"mcgd_$n",
       call_function("graft_mcgd_k", c(src).cast("double"), lit(n)).over(prim.cum)
     )
 
-  /** 1-D Kalman local-level filter — rec.Kalman; round-9 struct fold
+  /** 1-D Kalman local-level filter — RecKernels.Kalman; round-9 struct fold
     * (RecFolds.KalmanFold). */
   def kalman(q: Double = 0.01, r: Double = 1.0, src: String = "close"): DataFrame = {
     val s = call_function("graft_kalman_k", c(src).cast("double"), lit(q), lit(r)).over(prim.cum)
@@ -792,14 +792,14 @@ final class Ta(private val df: DataFrame) {
       .drop("__mu", "__sd")
   }
 
-  /** Ehlers 2-pole super smoother — see rec.Ssf. */
+  /** Ehlers 2-pole super smoother — see RecKernels.Ssf. */
   def ssf(n: Int = 10, src: String = "close"): DataFrame =
     df.withColumn(
       s"ssf_$n",
       call_function("graft_ssf_k", c(src).cast("double"), lit(n)).over(prim.cum)
     )
 
-  /** Holt-Winter MA — rec.Hwma; round-9 fold (RecFolds.HwmaFold). */
+  /** Holt-Winter MA — RecKernels.Hwma; round-9 fold (RecFolds.HwmaFold). */
   def hwma(na: Double = 0.2, nb: Double = 0.1, nc: Double = 0.1, src: String = "close"): DataFrame =
     df.withColumn(
       "hwma",
@@ -807,7 +807,7 @@ final class Ta(private val df: DataFrame) {
     )
 
   /** Fisher transform (reference momentum/fisher.py): rolling position in
-    * the HH/LL range feeds the v/fisher recursion (rec.Fisher). */
+    * the HH/LL range feeds the v/fisher recursion (RecKernels.Fisher). */
   def fisher(n: Int = 9): DataFrame = {
     // round-9 struct fold (RecFolds.FisherFold) over the staged range
     // position — the windowed input stays a column, the recursion folds
@@ -828,7 +828,7 @@ final class Ta(private val df: DataFrame) {
       .drop("__pos", "__fish")
   }
 
-  /** TD Sequential setup counts — see rec.TdSeq. */
+  /** TD Sequential setup counts — see RecKernels.TdSeq. */
   def tdSeq: DataFrame = {
     // round-9 struct fold (RecFolds.TdSeqFold — the close[4] lag rides
     // four shift slots, so no staged column is needed)
@@ -844,7 +844,7 @@ final class Ta(private val df: DataFrame) {
   }
 
   /** QQE (reference momentum/qqe.py): RSI → ema smooth → double-Wilder
-    * DAR bands → trailing state machine (rec.Qqe). */
+    * DAR bands → trailing state machine (RecKernels.Qqe). */
   def qqe(n: Int = 14, smooth: Int = 5, factor: Double = 4.236): DataFrame = {
     // round-9 struct fold (RecFolds.QqeFold) over the staged
     // smoothed-RSI / DAR chain
@@ -870,7 +870,7 @@ final class Ta(private val df: DataFrame) {
       .drop("__qrsi", "__rsima", "__adr", "__matr", "__dar", "__qqe")
   }
 
-  /** Jurik RSX — see rec.Rsx. */
+  /** Jurik RSX — see RecKernels.Rsx. */
   def rsx(n: Int = 14): DataFrame =
     // round-9 fold (RecFolds.RsxFold — twelve named filter slots, no ring)
     df.withColumn(
@@ -878,7 +878,7 @@ final class Ta(private val df: DataFrame) {
       call_function("graft_rsx_k", close.cast("double"), lit(n)).over(prim.cum)
     )
 
-  /** Ehlers Even Better SineWave — rec.Ebsw; round-9 fold
+  /** Ehlers Even Better SineWave — RecKernels.Ebsw; round-9 fold
     * (RecFolds.EbswFold). */
   def ebsw(n: Int = 40, bars: Int = 10): DataFrame =
     df.withColumn(
@@ -886,7 +886,7 @@ final class Ta(private val df: DataFrame) {
       call_function("graft_ebsw_k", close.cast("double"), lit(n), lit(bars)).over(prim.cum)
     )
 
-  /** Holt-Winter channel — rec.Hwc; round-9 struct fold
+  /** Holt-Winter channel — RecKernels.Hwc; round-9 struct fold
     * (RecFolds.HwcFold). */
   def hwc(na: Double = 0.2, nb: Double = 0.1, nc: Double = 0.1, nd: Double = 0.1, k: Double = 1.0): DataFrame = {
     val s = call_function(
@@ -908,7 +908,7 @@ final class Ta(private val df: DataFrame) {
     rec.perSeries(df, Seq(dbl(s"jma_$n")))(() => new rec.Jma(n, phase))
 
   /** Gann HiLo activator (reference overlap/hilo.py): sma(high,hn) /
-    * sma(low,ln) bands + trend state machine (rec.Hilo). */
+    * sma(low,ln) bands + trend state machine (RecKernels.Hilo). */
   def hilo(hn: Int = 13, ln: Int = 21): DataFrame = {
     // round-9 struct fold (RecFolds.HiloFold) over the staged MA bands
     val staged = df

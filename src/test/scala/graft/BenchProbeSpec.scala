@@ -431,4 +431,19 @@ class BenchProbeSpec extends AnyFunSuite {
     assert(v == Map("a" -> "real", "b" -> "ambient")) // c absent, stamped unmeasured downstream
     assert(v.collect { case (n, s) if s.startsWith("real") => n }.toSeq == Seq("a"))
   }
+
+  test("slim stdout line parses as JSON and carries a non-empty per-query map within budget") {
+    val qs = (1 to 300).map(i => f"x_query_name_$i%03d" -> i * 0.137)
+    val line = Bench.slimLine(
+      """{"metric":"total","value":41.100,"unit":"sec","n_ok":300,"n_failed":0,""",
+      qs,
+      ""","full_artifact":"BENCH_out.json","sf":"/data/sf0.1"}""")
+    assert(line.length <= Bench.slimBudget, s"${line.length} bytes")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    val queries = json.get("queries")
+    assert(queries.isObject && queries.size > 0, line)
+    assert(json.get("queries_shown").asInt == queries.size)
+    assert(queries.get("x_query_name_001").asDouble == 0.137)
+    assert(json.get("full_artifact").asText == "BENCH_out.json")
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField}
-import graft.ta.{rec, Ta}
+import graft.ta.{rec, RecKernels, Ta}
 import graft.ta.Ta._
 
 /** Round-9 REC fold lowering: the struct window folds
@@ -62,7 +62,7 @@ class RecFoldSpec extends AnyFunSuite {
     val kernel = rec.perSeries(
       bars,
       Seq(dbl("psar_long"), dbl("psar_short"), dbl("psar_af"), intF("psar_reversal"))
-    )(() => new rec.Psar(0.02, 0.02, 0.2))
+    )(() => new RecKernels.Psar(0.02, 0.02, 0.2))
     val fold = bars.ta.psar()
     assertSame(collectCols(kernel, cols), collectCols(fold, cols), cols)
     // sanity: the fixture actually exercises reversals in every series
@@ -78,7 +78,7 @@ class RecFoldSpec extends AnyFunSuite {
     val kernel = rec.perSeries(
       bars,
       Seq(dbl(s"supert_$n"), intF(s"supertd_$n"), dbl(s"supertl_$n"), dbl(s"superts_$n"))
-    )(() => new rec.Supertrend(n, 3.0))
+    )(() => new RecKernels.Supertrend(n, 3.0))
     val fold = bars.ta.supertrend(n, 3.0)
     assertSame(collectCols(kernel, cols), collectCols(fold, cols), cols)
     // both directions must occur
@@ -104,25 +104,25 @@ class RecFoldSpec extends AnyFunSuite {
     Graft.init(spark)
     // ha (struct, 4 outputs)
     val haCols = Seq("ha_open", "ha_high", "ha_low", "ha_close")
-    val haKernel = rec.perSeries(bars, haCols.map(dbl))(() => new rec.HeikinAshi)
+    val haKernel = rec.perSeries(bars, haCols.map(dbl))(() => new RecKernels.HeikinAshi)
     assertSame(collectCols(haKernel, haCols), collectCols(bars.ta.ha, haCols), haCols)
     // td_seq (struct, long outputs; kernel consumes staged __c4)
     val tdCols = Seq("td_seq_up", "td_seq_dn")
     val tdKernel = rec.perSeries(
       bars.withColumn("__c4", graft.ta.prim.shift(col("close"), 4)),
       tdCols.map(n => org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.LongType, nullable = true))
-    )(() => new rec.TdSeq).drop("__c4")
+    )(() => new RecKernels.TdSeq).drop("__c4")
     assertSame(collectCols(tdKernel, tdCols), collectCols(bars.ta.tdSeq, tdCols), tdCols)
     // ebsw
-    val ebKernel = rec.perSeries(bars, Seq(dbl("ebsw_20")))(() => new rec.Ebsw(20, 10))
+    val ebKernel = rec.perSeries(bars, Seq(dbl("ebsw_20")))(() => new RecKernels.Ebsw(20, 10))
     assertSame(
       collectCols(ebKernel, Seq("ebsw_20")), collectCols(bars.ta.ebsw(20, 10), Seq("ebsw_20")), Seq("ebsw_20"))
     // hwc (struct)
     val hwcCols = Seq("hwc_mid", "hwc_upper", "hwc_lower")
-    val hwcKernel = rec.perSeries(bars, hwcCols.map(dbl))(() => new rec.Hwc(0.2, 0.1, 0.1, 0.1, 1.0))
+    val hwcKernel = rec.perSeries(bars, hwcCols.map(dbl))(() => new RecKernels.Hwc(0.2, 0.1, 0.1, 0.1, 1.0))
     assertSame(collectCols(hwcKernel, hwcCols), collectCols(bars.ta.hwc(), hwcCols), hwcCols)
     // rsx — twelve named filter slots, the "ring buffer" that wasn't
-    val rsxKernel = rec.perSeries(bars, Seq(dbl("rsx_10")))(() => new rec.Rsx(10))
+    val rsxKernel = rec.perSeries(bars, Seq(dbl("rsx_10")))(() => new RecKernels.Rsx(10))
     assertSame(
       collectCols(rsxKernel, Seq("rsx_10")), collectCols(bars.ta.rsx(10), Seq("rsx_10")), Seq("rsx_10"))
   }
@@ -144,17 +144,17 @@ class RecFoldSpec extends AnyFunSuite {
   test("wave-2 folds == their kernels, bit-exact with nulls: mcgd, ssf, hwma, kalman") {
     Graft.init(spark)
     val nf = nullClose
-    val mKernel = rec.perSeries(nf, Seq(dbl("mcgd_10")))(() => new rec.Mcgd(10, "close"))
+    val mKernel = rec.perSeries(nf, Seq(dbl("mcgd_10")))(() => new RecKernels.Mcgd(10, "close"))
     assertSame(
       collectCols(mKernel, Seq("mcgd_10")), collectCols(nf.ta.mcgd(10), Seq("mcgd_10")), Seq("mcgd_10"))
-    val sKernel = rec.perSeries(nf, Seq(dbl("ssf_10")))(() => new rec.Ssf(10, "close"))
+    val sKernel = rec.perSeries(nf, Seq(dbl("ssf_10")))(() => new RecKernels.Ssf(10, "close"))
     assertSame(
       collectCols(sKernel, Seq("ssf_10")), collectCols(nf.ta.ssf(10), Seq("ssf_10")), Seq("ssf_10"))
-    val hKernel = rec.perSeries(nf, Seq(dbl("hwma")))(() => new rec.Hwma(0.2, 0.1, 0.1, "close"))
+    val hKernel = rec.perSeries(nf, Seq(dbl("hwma")))(() => new RecKernels.Hwma(0.2, 0.1, 0.1, "close"))
     assertSame(
       collectCols(hKernel, Seq("hwma")), collectCols(nf.ta.hwma(), Seq("hwma")), Seq("hwma"))
     val kCols = Seq("kf", "kf_gain")
-    val kKernel = rec.perSeries(nf, kCols.map(dbl))(() => new rec.Kalman(0.01, 1.0, "close"))
+    val kKernel = rec.perSeries(nf, kCols.map(dbl))(() => new RecKernels.Kalman(0.01, 1.0, "close"))
     assertSame(collectCols(kKernel, kCols), collectCols(nf.ta.kalman(), kCols), kCols)
   }
 
@@ -166,14 +166,14 @@ class RecFoldSpec extends AnyFunSuite {
     val hiloStaged = bars
       .withColumn("__mh", P.rmean(col("high"), 13))
       .withColumn("__ml", P.rmean(col("low"), 21))
-    val hiloKernel = rec.perSeries(hiloStaged, hiloCols.map(dbl))(() => new rec.Hilo)
+    val hiloKernel = rec.perSeries(hiloStaged, hiloCols.map(dbl))(() => new RecKernels.Hilo)
     assertSame(collectCols(hiloKernel, hiloCols), collectCols(bars.ta.hilo(13, 21), hiloCols), hiloCols)
     // fisher: staged range position + FisherFold
     val fishCols = Seq("fisher_9", "fisher_signal_9")
     val m = (col("high") + col("low")) / 2.0
     val hh = P.rmax(m, 9); val ll = P.rmin(m, 9)
     val fishStaged = bars.withColumn("__pos", lit(2.0) * (P.sdiv(m - ll, hh - ll) - 0.5))
-    val fishKernel = rec.perSeries(fishStaged, fishCols.map(dbl))(() => new rec.Fisher)
+    val fishKernel = rec.perSeries(fishStaged, fishCols.map(dbl))(() => new RecKernels.Fisher)
     assertSame(collectCols(fishKernel, fishCols), collectCols(bars.ta.fisher(9), fishCols), fishCols)
     // qqe: the full staged chain + QqeFold
     val qqeCols = Seq("qqe_6", "qqe_trend_6", "qqe_long_6", "qqe_short_6")
@@ -189,7 +189,7 @@ class RecFoldSpec extends AnyFunSuite {
     val qqeKernel = rec.perSeries(
       q2,
       Seq(dbl("qqe_6"), intF("qqe_trend_6"), dbl("qqe_long_6"), dbl("qqe_short_6"))
-    )(() => new rec.Qqe)
+    )(() => new RecKernels.Qqe)
     assertSame(collectCols(qqeKernel, qqeCols), collectCols(bars.ta.qqe(6, 3), qqeCols), qqeCols)
   }
 

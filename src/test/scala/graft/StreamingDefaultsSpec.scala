@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.streaming.StreamingTa
 import graft.ta.{registry, IndicatorSpec}
 
@@ -16,12 +15,6 @@ import graft.ta.{registry, IndicatorSpec}
   * value-for-value. A drifted default now fails here by name. */
 class StreamingDefaultsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private val barFields = Seq(
-    StructField("series_id", StringType), StructField("ts", LongType),
-    StructField("open", DoubleType), StructField("high", DoubleType),
-    StructField("low", DoubleType), StructField("close", DoubleType),
-    StructField("volume", DoubleType))
 
   test("every streamable kind at EMPTY params equals batch at empty params") {
     import spark.implicits._
@@ -48,21 +41,15 @@ class StreamingDefaultsSpec extends AnyFunSuite {
       val spec =
         if (kind == "cusum") IndicatorSpec(kind, Map("mu" -> 100.0, "sd" -> 10.0))
         else IndicatorSpec(kind)
-      val sk = StreamingTa.windowStream(spec).orElse(StreamingTa.recStream(spec))
-        .getOrElse(fail(s"$kind in streamableKinds but no dispatcher"))
+      val sk = StreamingTa.streamKernel(spec)
+        .getOrElse(fail(s"$kind in streamableKinds but no streamKernel"))
 
       // in-process replica of the kernelBatchStream per-series fold
       val streamed = scala.collection.mutable.Map[(String, Long), Map[String, Any]]()
       ticks.groupBy(_.series_id).foreach { case (_, ts0) =>
-        val es = StructType(barFields ++ sk.stage().fields)
-        val kern = sk.make(); kern.init(es); kern.reset()
         val stg = sk.stage()
         ts0.sortBy(_.ts).foreach { t =>
-          val base = Array[Any](t.series_id, t.ts, t.open, t.high, t.low, t.close, t.volume)
-          val row = new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-            base ++ stg.update(t), es)
-          val vals = kern.update(row)
-          streamed((t.series_id, t.ts)) = sk.outs.map(_.name).map(n => n).zip(vals.toSeq).toMap
+          streamed((t.series_id, t.ts)) = sk.outs.map(_.name).zip(stg.update(t).toSeq).toMap
         }
       }
 

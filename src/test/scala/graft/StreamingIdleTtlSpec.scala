@@ -24,8 +24,8 @@ class StreamingIdleTtlSpec extends AnyFunSuite {
     r.map(i => StreamingTa.BarTick(sid, i.toLong, i + 0.5, i + 1.0, i.toDouble, i + 0.7, 100.0))
 
   private def sks = Seq(
-    StreamingTa.windowStream(IndicatorSpec("ema", Map("length" -> 5))).get,
-    StreamingTa.windowStream(IndicatorSpec("atr", Map("length" -> 5))).get)
+    StreamingTa.streamKernel(IndicatorSpec("ema", Map("length" -> 5))).get,
+    StreamingTa.streamKernel(IndicatorSpec("atr", Map("length" -> 5))).get)
 
   private def stateRows(q: org.apache.spark.sql.streaming.StreamingQuery): Option[Long] =
     q.recentProgress.toSeq.flatMap(_.stateOperators.toSeq).lastOption.map(_.numRowsTotal)

@@ -6,7 +6,7 @@ import graft.streaming.StreamingTa
 import graft.ta.Ta._
 import java.nio.file.Files
 
-/** Streaming REC kernels must equal the batch mapPartitions pass. */
+/** Streamed indicators must equal the batch strategy on the same bars. */
 class StreamingKernelSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -36,7 +36,7 @@ class StreamingKernelSpec extends AnyFunSuite {
       .as[StreamingTa.BarTick]
 
     val q = StreamingTa
-      .kernelStream(stream, () => new graft.ta.rec.Psar())
+      .kernelStream(stream, () => new graft.ta.RecKernels.Psar())
       .writeStream
       .format("memory")
       .queryName("psar_stream")
@@ -90,7 +90,8 @@ class StreamingKernelSpec extends AnyFunSuite {
       .as[StreamingTa.BarTick]
 
     // the strategy_ohlcv_batch param set — every REC kind, incl. the four
-    // with window-derived staging (fisher, hilo, td_seq, qqe)
+    // with window-derived staging (fisher, hilo, td_seq, qqe); jma and
+    // fixed-reference cusum stream their kernels, the rest their folds
     val specs14 = Seq(
       IndicatorSpec("psar"),
       IndicatorSpec("supertrend", Map("length" -> 7)),
@@ -108,10 +109,10 @@ class StreamingKernelSpec extends AnyFunSuite {
       IndicatorSpec("jma", Map("length" -> 7)),
       IndicatorSpec("kalman", Map("q" -> 0.05, "r" -> 1.0)),
       // fixed-reference CUSUM — the causal, streamable mode (trained μ/σ
-      // ride as literals in both the batch lowering and the stream stage)
+      // ride as constant columns in both the batch lowering and the stream)
       IndicatorSpec("cusum", Map("mu" -> 100.0, "sd" -> 10.0, "k" -> 0.25, "h" -> 3.0))
     )
-    val sks = specs14.map(s => StreamingTa.recStream(s).getOrElse(fail(s"no recStream for ${s.kind}")))
+    val sks = specs14.map(s => StreamingTa.streamKernel(s).getOrElse(fail(s"no streamKernel for ${s.kind}")))
 
     val q = StreamingTa
       .kernelBatchStream(stream, sks)
@@ -132,14 +133,13 @@ class StreamingKernelSpec extends AnyFunSuite {
     val streamed = spark.table("k14_stream").collect().map(r => r.getAs[Long]("ts") -> r).toMap
     assert(streamed.size == ticks.length)
 
-    specs14.foreach { spec =>
-      val (stagefn, outs, make) = registry.recKernel(spec).get
-      val batch = graft.ta.rec.perSeries(stagefn(bars), outs)(make).orderBy("ts").collect()
+    specs14.zip(sks).foreach { case (spec, sk) =>
+      val batch = registry(bars, spec).orderBy("ts").collect()
       batch.foreach { br =>
         val sr = streamed(br.getAs[Long]("ts"))
-        outs.foreach { f =>
-          // schema parity too: the streamed column keeps the declared type
-          assert(sr.schema(f.name).dataType == f.dataType, s"${spec.kind}/${f.name} type")
+        sk.outs.foreach { f =>
+          // schema parity too: the streamed column keeps the batch type
+          assert(sr.schema(f.name).dataType == br.schema(f.name).dataType, s"${spec.kind}/${f.name} type")
           assert(
             norm(sr.getAs[Any](f.name)) == norm(br.getAs[Any](f.name)),
             s"${spec.kind}/${f.name} mismatch at ts=${br.getAs[Long]("ts")}"
@@ -211,8 +211,8 @@ class StreamingKernelSpec extends AnyFunSuite {
       IndicatorSpec("bbands", Map("length" -> 5, "std" -> 2.0)),
       IndicatorSpec("kc", Map("length" -> 20, "scalar" -> 2.0))
     )
-    val sks = wSpecs.map(s => StreamingTa.windowStream(s).getOrElse(fail(s"no windowStream for ${s.kind}"))) :+
-      StreamingTa.recStream(IndicatorSpec("ssf", Map("length" -> 10))).get
+    val sks = wSpecs.map(s => StreamingTa.streamKernel(s).getOrElse(fail(s"no streamKernel for ${s.kind}"))) :+
+      StreamingTa.streamKernel(IndicatorSpec("ssf", Map("length" -> 10))).get
 
     val q = StreamingTa
       .kernelBatchStream(stream, sks)
@@ -259,170 +259,80 @@ class StreamingKernelSpec extends AnyFunSuite {
     }
   }
 
-  test("extended streaming families (ELEM/CUM/rolling/recursive) equal batch") {
-    // round-10 coverage expansion: every new Elem/Cum/Roll/Recur stage
-    // vs the batch registry builder on the same bars — one
-    // kernelBatchStream pass carrying all ~70 stages at once, so the
-    // composition is exercised along with each kind's arithmetic
+  test("every streamable kind streams equal to batch at two parameter sets") {
+    // The one parity gate over the whole streaming surface: its input is
+    // StreamingTa.streamableKinds, not a hand-picked list. Every kind at
+    // its default parameters, plus length=7 where the kind has a length,
+    // streams over seeded multi-series bars in several micro-batches, and
+    // each streamed column must equal the registry.strategy batch column:
+    // doubles at 6 dp, integral columns exact, declared types equal.
     import spark.implicits._
-    import graft.ta.{registry, IndicatorSpec}
-    val bars = Graft
-      .bars(spark, TestSpark.sfDir)
-      .select(
-        col("series_id").cast("string").as("series_id"),
-        unix_date(col("ts")).cast("long").as("ts"),
-        col("open"), col("high"), col("low"), col("close"), col("volume")
-      )
-    val ticks = bars.as[StreamingTa.BarTick].collect().sortBy(_.ts)
-
-    val srcDir = Files.createTempDirectory("graft_extstream").toFile
-    ticks.grouped(10).zipWithIndex.foreach { case (chunk, i) =>
-      spark.createDataset(chunk.toSeq).coalesce(1).write.parquet(s"$srcDir/c$i")
-      val f = new java.io.File(s"$srcDir/c$i").listFiles().filter(_.getName.endsWith(".parquet")).head
-      Files.copy(f.toPath, new java.io.File(srcDir, f"e$i%03d.parquet").toPath)
-      Thread.sleep(20)
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.ta.{registry, IndicatorSpec, Strategy}
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val rnd = new scala.util.Random(11)
+    val ticks = (0 until 3).flatMap { s =>
+      var p = 100.0
+      (0 until 120).map { i =>
+        p = math.max(1.0, p + rnd.nextGaussian())
+        val o = p + rnd.nextGaussian() * 0.3; val c = p + rnd.nextGaussian() * 0.3
+        StreamingTa.BarTick(s"s$s", 86400L * i, o, math.max(o, c) + rnd.nextDouble(),
+          math.min(o, c) - rnd.nextDouble(), c, 1000.0 + rnd.nextInt(500))
+      }
     }
-    val stream = spark.readStream
-      .schema("series_id STRING, ts BIGINT, open DOUBLE, high DOUBLE, low DOUBLE, close DOUBLE, volume DOUBLE")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir.getAbsolutePath)
-      .as[StreamingTa.BarTick]
+    val bars = ticks.toDF()
 
-    // pgo internally drops the true_range column, so it precedes the
-    // true_range spec in the BATCH fold (stream stages are independent)
-    val specs = Seq(
-      IndicatorSpec("pgo", Map("length" -> 14)),
-      // composites that DROP helper columns (true_range / rvi_N) come
-      // before the specs that emit those columns in the batch fold
-      IndicatorSpec("cksp", Map("p" -> 10, "x" -> 1.0, "q" -> 9)),
-      IndicatorSpec("squeeze", Map("bb_length" -> 10, "kc_length" -> 10, "mom_length" -> 6)),
-      IndicatorSpec("squeeze_pro", Map("bb_length" -> 10, "kc_length" -> 10, "mom_length" -> 6)),
-      IndicatorSpec("inertia", Map("length" -> 10, "rvi_length" -> 10)),
-      IndicatorSpec("massi", Map("fast" -> 3, "slow" -> 10)),
-      IndicatorSpec("rvi", Map("length" -> 10)),
-      IndicatorSpec("thermo", Map("length" -> 10)),
-      IndicatorSpec("amat", Map("fast" -> 4, "slow" -> 10)),
-      IndicatorSpec("kdj", Map("length" -> 9, "signal" -> 3)),
-      IndicatorSpec("rvgi", Map("length" -> 10, "swma_length" -> 4)),
-      IndicatorSpec("smi", Map("length" -> 10, "fast" -> 5, "slow" -> 3)),
-      IndicatorSpec("stc", Map("tclength" -> 5, "fast" -> 5, "slow" -> 10)),
-      IndicatorSpec("aobv", Map("fast" -> 4, "slow" -> 12)),
-      IndicatorSpec("kvo", Map("fast" -> 5, "slow" -> 10, "signal" -> 3)),
-      IndicatorSpec("stochrsi", Map("length" -> 10)),
-      // elem
-      IndicatorSpec("hl2"), IndicatorSpec("hlc3"), IndicatorSpec("ohlc4"), IndicatorSpec("wcp"),
-      IndicatorSpec("bop"), IndicatorSpec("true_range"), IndicatorSpec("pvol"), IndicatorSpec("pvr"),
-      IndicatorSpec("pdist"), IndicatorSpec("slope", Map("length" -> 1)),
-      IndicatorSpec("log_return", Map("length" -> 1)),
-      IndicatorSpec("percent_return", Map("length" -> 1)),
-      IndicatorSpec("increasing", Map("length" -> 1)), IndicatorSpec("decreasing", Map("length" -> 1)),
-      // cum
-      IndicatorSpec("vwap"), IndicatorSpec("obv"), IndicatorSpec("ad"), IndicatorSpec("pvt"),
-      IndicatorSpec("nvi"), IndicatorSpec("pvi"), IndicatorSpec("drawdown"),
-      // rolling
-      IndicatorSpec("alma", Map("length" -> 10)), IndicatorSpec("fwma", Map("length" -> 10)),
-      IndicatorSpec("pwma", Map("length" -> 10)), IndicatorSpec("swma", Map("length" -> 10)),
-      IndicatorSpec("sinwma", Map("length" -> 10)), IndicatorSpec("hma", Map("length" -> 10)),
-      IndicatorSpec("trima", Map("length" -> 10)),
-      IndicatorSpec("variance", Map("length" -> 10)), IndicatorSpec("median", Map("length" -> 10)),
-      IndicatorSpec("quantile", Map("length" -> 10, "q" -> 0.75)),
-      IndicatorSpec("mad", Map("length" -> 10)), IndicatorSpec("skew", Map("length" -> 10)),
-      IndicatorSpec("kurtosis", Map("length" -> 10)),
-      IndicatorSpec("geometric_mean", Map("length" -> 10)),
-      IndicatorSpec("entropy", Map("length" -> 10)),
-      IndicatorSpec("cmo", Map("length" -> 10)), IndicatorSpec("er", Map("length" -> 10)),
-      IndicatorSpec("psl", Map("length" -> 10)), IndicatorSpec("vhf", Map("length" -> 10)),
-      IndicatorSpec("cg", Map("length" -> 10)), IndicatorSpec("cfo", Map("length" -> 10)),
-      IndicatorSpec("cti", Map("length" -> 10)),
-      IndicatorSpec("coppock", Map("length" -> 10, "fast" -> 11, "slow" -> 14)),
-      IndicatorSpec("qstick", Map("length" -> 10)), IndicatorSpec("ttm_trend", Map("length" -> 6)),
-      IndicatorSpec("cci", Map("length" -> 10)),
-      IndicatorSpec("ao", Map("fast" -> 5, "slow" -> 20)),
-      IndicatorSpec("apo", Map("fast" -> 12, "slow" -> 26)),
-      IndicatorSpec("ppo", Map("fast" -> 12, "slow" -> 26)),
-      IndicatorSpec("bias", Map("length" -> 10)), IndicatorSpec("vwma", Map("length" -> 10)),
-      IndicatorSpec("donchian", Map("length" -> 10)), IndicatorSpec("accbands", Map("length" -> 10)),
-      IndicatorSpec("chop", Map("length" -> 10)), IndicatorSpec("vortex", Map("length" -> 10)),
-      IndicatorSpec("ui", Map("length" -> 10)),
-      IndicatorSpec("uo", Map("fast" -> 7, "medium" -> 14, "slow" -> 28)),
-      IndicatorSpec("brar", Map("length" -> 10)), IndicatorSpec("aroon", Map("length" -> 10)),
-      IndicatorSpec("eom", Map("length" -> 14)), IndicatorSpec("mfi", Map("length" -> 10)),
-      IndicatorSpec("cmf", Map("length" -> 10)),
-      // recursive
-      IndicatorSpec("zlma", Map("length" -> 10)), IndicatorSpec("t3", Map("length" -> 10)),
-      IndicatorSpec("pvo", Map("fast" -> 12, "slow" -> 26, "signal" -> 9)),
-      IndicatorSpec("adosc", Map("fast" -> 3, "slow" -> 10)),
-      IndicatorSpec("efi", Map("length" -> 10)),
-      IndicatorSpec("kama", Map("length" -> 10, "fast" -> 2, "slow" -> 30)),
-      IndicatorSpec("vidya", Map("length" -> 10)),
-      IndicatorSpec("dm", Map("length" -> 14)), IndicatorSpec("decay", Map("length" -> 5)),
-      // candle singles
-      IndicatorSpec("cdl_doji", Map("length" -> 10, "factor" -> 0.1)),
-      IndicatorSpec("cdl_inside"), IndicatorSpec("cdl_z", Map("length" -> 10)),
-      IndicatorSpec("candle_utils")
-    )
-    val sks = specs.map(s => StreamingTa.windowStream(s).getOrElse(fail(s"no windowStream for ${s.kind}")))
-
-    val q = StreamingTa
-      .kernelBatchStream(stream, sks)
-      .writeStream
-      .format("memory")
-      .queryName("ext_stream")
-      .outputMode("append")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    def specFor(kind: String, p: Map[String, Any] = Map.empty) =
+      IndicatorSpec(kind, if (kind == "cusum") p ++ Map("mu" -> 100.0, "sd" -> 10.0) else p)
+    val kernels = StreamingTa.streamableKinds.toSeq.sorted.flatMap { k =>
+      val dflt = StreamingTa.streamKernel(specFor(k)).getOrElse(fail(s"$k streamable but no kernel"))
+      val other = StreamingTa.streamKernel(specFor(k, Map("length" -> 7)))
+        .filter(_.outs.map(_.name) != dflt.outs.map(_.name))
+      (specFor(k) -> dflt) +: other.map(specFor(k, Map("length" -> 7)) -> _).toSeq
+    }
+    // pack specs into strategies whose streamed columns do not collide
+    val packs = scala.collection.mutable.ArrayBuffer.empty[scala.collection.mutable.ArrayBuffer[(IndicatorSpec, StreamingTa.StreamKernel)]]
+    kernels.foreach { case e @ (_, sk) =>
+      val names = sk.outs.map(_.name).toSet
+      packs.find(_.forall(_._2.outs.forall(f => !names(f.name)))) match {
+        case Some(pk) => pk += e
+        case None => packs += scala.collection.mutable.ArrayBuffer(e)
+      }
+    }
 
     def norm(v: Any): Any = v match {
       case null => null
       case d: Double => math.rint(d * 1e6) / 1e6
       case other => other
     }
-    val streamed = spark.table("ext_stream").collect().map(r => r.getAs[Long]("ts") -> r).toMap
-    assert(streamed.size == ticks.length)
-
-    val batch = specs
-      .foldLeft(bars)((d, s) => registry(d, s))
-      .orderBy("ts")
-      .collect()
-    val outCols = Seq(
-      "pgo_14",
-      "hl2", "hlc3", "ohlc4", "wcp", "bop", "true_range", "pvol", "pvr", "pdist",
-      "slope_1", "log_return_1", "percent_return_1", "increasing_1", "decreasing_1",
-      "vwap", "obv", "ad", "pvt", "nvi", "pvi", "dd", "dd_pct", "dd_log",
-      "alma_10", "fwma_10", "pwma_10", "swma_10", "sinwma_10", "hma_10", "trima_10",
-      "variance_10", "median_10", "quantile_10", "mad_10", "skew_10", "kurtosis_10",
-      "geomean_10", "entropy_10",
-      "cmo_10", "er_10", "psl_10", "vhf_10", "cg_10", "cfo_10", "cti_10",
-      "coppock_10_11_14", "qstick_10", "ttm_trend_6", "cci_10",
-      "ao_5_20", "apo_12_26", "ppo_12_26", "bias_10", "vwma_10",
-      "dcl_10", "dcu_10", "dcm_10", "accbl_10", "accbm_10", "accbu_10",
-      "chop_10", "vtxp_10", "vtxm_10", "ui_10", "uo_7_14_28",
-      "ar_10", "br_10", "aroon_u_10", "aroon_d_10",
-      "eom_14", "mfi_10", "cmf_10",
-      "zlma_10", "t3_10", "pvo_12_26", "pvos_12_26", "pvoh_12_26",
-      "adosc_3_10", "efi_10", "kama_10", "vidya_10",
-      "dmp_14", "dmn_14", "decay_5",
-      "cdl_doji_10", "cdl_inside", "open_z_10", "high_z_10", "low_z_10", "close_z_10",
-      "candle_color", "real_body", "high_low_range",
-      "massi_3_10", "rvi_10", "thermo", "thermo_ma_10",
-      "cksp_long_10", "cksp_short_10", "amat_lr_4", "amat_sr_4",
-      "kdj_k_9", "kdj_d_9", "kdj_j_9", "rvgi_10", "rvgis_10", "smi_10",
-      "sqz_on", "sqz_off", "sqz_mom",
-      "sqzpro_on_wide", "sqzpro_on_normal", "sqzpro_on_narrow", "sqzpro_mom",
-      "stc_5", "stc_macd_5", "inertia_10",
-      "obv_fast_4", "obv_slow_12", "aobv_lr", "aobv_sr",
-      "kvo_5", "kvos_5", "stochrsi_k", "stochrsi_d"
-    )
-    batch.foreach { br =>
-      val sr = streamed(br.getAs[Long]("ts"))
-      outCols.foreach { c0 =>
-        assert(
-          norm(sr.getAs[Any](c0)) == norm(br.getAs[Any](c0)),
-          s"$c0 mismatch at ts=${br.getAs[Long]("ts")}"
-        )
+    val failures = scala.collection.mutable.ArrayBuffer.empty[String]
+    packs.zipWithIndex.foreach { case (pk, pi) =>
+      val st = Strategy(s"gate$pi", pk.map(_._1).toSeq)
+      val ms = MemoryStream[StreamingTa.BarTick]
+      val q = StreamingTa.strategyStream(ms.toDS(), st)
+        .writeStream.format("memory").queryName(s"gate_stream_$pi").outputMode("append").start()
+      ticks.sortBy(_.ts).grouped(90).foreach { chunk => ms.addData(chunk); q.processAllAvailable() }
+      q.stop()
+      val streamedDf = spark.table(s"gate_stream_$pi")
+      val streamed = streamedDf.collect()
+        .map(r => (r.getAs[String]("series_id"), r.getAs[Long]("ts")) -> r).toMap
+      assert(streamed.size == ticks.length, s"pack $pi emitted ${streamed.size} of ${ticks.length} rows")
+      val batchDf = registry.strategy(bars, st)
+      batchDf.collect().foreach { br =>
+        val sr = streamed((br.getAs[String]("series_id"), br.getAs[Long]("ts")))
+        pk.foreach { case (spec, sk) =>
+          sk.outs.foreach { f =>
+            if (streamedDf.schema(f.name).dataType != batchDf.schema(f.name).dataType)
+              failures += s"${spec}/${f.name}: type ${streamedDf.schema(f.name).dataType} vs batch ${batchDf.schema(f.name).dataType}"
+            else if (norm(sr.getAs[Any](f.name)) != norm(br.getAs[Any](f.name)))
+              failures += s"${spec}/${f.name}@${sr.getAs[String]("series_id")}/${sr.getAs[Long]("ts")}: " +
+                s"stream=${sr.getAs[Any](f.name)} batch=${br.getAs[Any](f.name)}"
+          }
+        }
       }
     }
+    assert(kernels.size > StreamingTa.streamableKinds.size, "no non-default lengths were streamed")
+    assert(failures.isEmpty, s"${failures.size} stream/batch mismatches:\n" + failures.distinct.take(30).mkString("\n"))
   }
 
   test("strategyStream runs a mixed Strategy in one pass and equals the batch strategy") {

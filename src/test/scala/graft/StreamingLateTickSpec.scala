@@ -64,8 +64,8 @@ class StreamingLateTickSpec extends AnyFunSuite {
     val lateTs = ticks(lateIdx).ts
 
     val srcDir = writeStraddled(ticks, lateIdx)
-    val sks = specs.map(s => StreamingTa.windowStream(s).get) :+
-      StreamingTa.recStream(IndicatorSpec("psar")).get
+    val sks = specs.map(s => StreamingTa.streamKernel(s).get) :+
+      StreamingTa.streamKernel(IndicatorSpec("psar")).get
     val acc = spark.sparkContext.longAccumulator("late_test_drop")
 
     val q = StreamingTa
@@ -90,14 +90,10 @@ class StreamingLateTickSpec extends AnyFunSuite {
     // (a) state equals the in-order run with the late tick dropped: every
     // emitted value matches the batch engine run on the data WITHOUT it —
     // including all rows AFTER the drop (state carried forward uncorrupted)
-    val batchRef = specs
+    val refRows = (specs :+ IndicatorSpec("psar"))
       .foldLeft(bars.where(col("ts") =!= lit(lateTs)))((d, s) => registry(d, s))
-    val (stagefn, psarOuts, make) = registry.recKernel(IndicatorSpec("psar")).get
-    val psarRef = graft.ta.rec
-      .perSeries(stagefn(bars.where(col("ts") =!= lit(lateTs))), psarOuts)(make)
-      .select(col("ts").as("pts") +: psarOuts.map(f => col(f.name)): _*)
+      .collect()
     val outCols = sks.flatMap(_.outs.map(_.name))
-    val refRows = batchRef.join(psarRef, col("ts") === col("pts")).collect()
     assert(refRows.length == ticks.length - 1)
     refRows.foreach { br =>
       val sr = streamed(br.getAs[Long]("ts"))
@@ -120,7 +116,7 @@ class StreamingLateTickSpec extends AnyFunSuite {
       )
     val ticks = bars.as[StreamingTa.BarTick].collect().sortBy(_.ts)
     val srcDir = writeStraddled(ticks, 20)
-    val sks = Seq(StreamingTa.windowStream(IndicatorSpec("ema", Map("length" -> 10))).get)
+    val sks = Seq(StreamingTa.streamKernel(IndicatorSpec("ema", Map("length" -> 10))).get)
 
     val q = StreamingTa
       .kernelBatchStream(readStream(srcDir), sks, latePolicy = "fail")
@@ -159,9 +155,9 @@ class StreamingLateTickSpec extends AnyFunSuite {
 
     val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StreamingTa.BarTick]
     val sks = Seq(
-      StreamingTa.windowStream(IndicatorSpec("ema", Map("length" -> 10))).get,
-      StreamingTa.windowStream(IndicatorSpec("atr", Map("length" -> 10))).get,
-      StreamingTa.recStream(IndicatorSpec("psar")).get)
+      StreamingTa.streamKernel(IndicatorSpec("ema", Map("length" -> 10))).get,
+      StreamingTa.streamKernel(IndicatorSpec("atr", Map("length" -> 10))).get,
+      StreamingTa.streamKernel(IndicatorSpec("psar")).get)
     val acc = spark.sparkContext.longAccumulator("late_many_drop")
     val q = StreamingTa
       .kernelBatchStream(ms.toDS(), sks, latePolicy = "drop", lateCounter = Some(acc))
@@ -196,7 +192,7 @@ class StreamingLateTickSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StreamingTa.BarTick]
-    val sks = Seq(StreamingTa.windowStream(IndicatorSpec("ema", Map("length" -> 10))).get)
+    val sks = Seq(StreamingTa.streamKernel(IndicatorSpec("ema", Map("length" -> 10))).get)
     val ex = intercept[IllegalArgumentException] {
       StreamingTa.kernelBatchStream(ms.toDS(), sks, latePolicy = "lenient")
     }

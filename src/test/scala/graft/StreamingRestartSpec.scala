@@ -13,11 +13,12 @@ import java.nio.file.Files
   * over both runs equals the one-shot batch run row-for-row.
   *
   * RESTART CONTRACT (documented here and in SCALING.md): resume requires
-  * the SAME kernel/stage classes — the state encoding (kryo, like the
-  * javaSerialization it replaced) is class-coupled, so a code change to any
-  * kernel class between runs invalidates the checkpoint; drain (stop at a
-  * batch boundary, land output, restart fresh with a warm-up replay) is the
-  * upgrade path. */
+  * the SAME strategy — the state layout follows each spec's compiled plan,
+  * and every series' state carries a fingerprint of the strategy that
+  * wrote it, so a resume with a changed kind, parameter or spec order
+  * fails loudly instead of folding ticks into another indicator's state;
+  * drain (stop at a batch boundary, land output, restart with
+  * strategyStreamWarm) is the upgrade path. */
 class StreamingRestartSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -98,5 +99,60 @@ class StreamingRestartSpec extends AnyFunSuite {
           s"$c0 mismatch at ts=${br.getAs[Long]("ts")} — state did not survive the restart")
       }
     }
+  }
+
+  test("resume with a changed strategy (sma 20 in place of sma 10) fails loudly") {
+    import spark.implicits._
+    val bars = Graft
+      .bars(spark, TestSpark.sfDir)
+      .select(
+        col("series_id").cast("string").as("series_id"),
+        unix_date(col("ts")).cast("long").as("ts"),
+        col("open"), col("high"), col("low"), col("close"), col("volume")
+      )
+    val ticks = bars.as[StreamingTa.BarTick].collect().sortBy(_.ts)
+    val srcDir = Files.createTempDirectory("graft_redeploy_src").toFile
+    val ckpt = Files.createTempDirectory("graft_redeploy_ckpt").toFile
+    def writeChunk(chunk: Seq[StreamingTa.BarTick], name: String): Unit = {
+      spark.createDataset(chunk).coalesce(1).write.parquet(s"$srcDir/$name-tmp")
+      val f = new java.io.File(s"$srcDir/$name-tmp").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      Files.copy(f.toPath, new java.io.File(srcDir, s"$name.parquet").toPath)
+      Thread.sleep(20)
+    }
+    def strategy(smaLen: Int) = Strategy("redeploy", Seq(
+      IndicatorSpec("ema", Map("length" -> 10)),
+      IndicatorSpec("sma", Map("length" -> smaLen)),
+      IndicatorSpec("atr", Map("length" -> 10)),
+      IndicatorSpec("psar")))
+    def startQuery(st: Strategy) =
+      StreamingTa
+        .strategyStream(
+          spark.readStream
+            .schema("series_id STRING, ts BIGINT, open DOUBLE, high DOUBLE, low DOUBLE, close DOUBLE, volume DOUBLE")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(srcDir.getAbsolutePath)
+            .as[StreamingTa.BarTick],
+          st)
+        .writeStream
+        .format("noop")
+        .option("checkpointLocation", ckpt.getAbsolutePath)
+        .outputMode("append")
+        .start()
+
+    val (firstHalf, secondHalf) = ticks.splitAt(ticks.length / 2)
+    firstHalf.grouped(5).zipWithIndex.foreach { case (c, i) => writeChunk(c.toSeq, f"a$i%03d") }
+    val q1 = startQuery(strategy(10))
+    q1.processAllAvailable()
+    q1.stop()
+
+    // same number of specs, one parameter changed: the old state must not
+    // be folded on as if it were sma(20)'s
+    secondHalf.grouped(5).zipWithIndex.foreach { case (c, i) => writeChunk(c.toSeq, f"b$i%03d") }
+    val q2 = startQuery(strategy(20))
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q2.processAllAvailable())
+    q2.stop()
+    val messages = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    assert(messages.contains("the strategy changed across a checkpoint restart"), messages)
   }
 }
